@@ -11,19 +11,26 @@ Key semantics parity:
 - TTL retention sweep (``app/features/jobs/backfill.py:191-215``);
 - gap detection vs an expected bar grid (``backfill.py:45-76``).
 
-Scale design: partition pruning on (domain, symbol, timeframe) makes
-every point/range read touch one directory; rows are written sorted
-by ``ts`` so Parquet row-group min/max stats subsume the Redis ZSET
-index (SURVEY §1.1, §4). Payloads stay *columnar* (one column per
-feature) — the JSON-blob shape of Redis is an access-API detail, not
-a storage one.
+Scale design: every point/range read addresses the one partition
+directory of its key, ``domain=…/symbol=…/timeframe=…``, so building a
+read lists that directory only and runs no Spark job; the collect is
+the read's one job. Rows are written sorted by ``ts`` so Parquet
+row-group min/max stats subsume the Redis ZSET index (SURVEY §1.1, §4).
+The read schema (every file's columns, key columns as strings) is
+inferred once per instance and cleared by that instance's writes; a
+column another writer adds appears once a new instance is opened.
+Rows appended by any writer show in the next read. Payloads stay
+*columnar* (one column per feature) — the JSON-blob shape of Redis is
+an access-API detail, not a storage one.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..functions.cleaning import sanitize_symbol
 from ..operators.joins import expected_grid, find_gaps
@@ -42,9 +49,13 @@ class FeatureStore:
         dashboard under ``monitoring/grafana/`` reads exactly these).
         Latency covers the Spark ACTION for writes and the plan BUILD
         for reads (reads are lazy; execution cost lands on whichever
-        job consumes the frame)."""
+        job consumes the frame). A read build lists one partition
+        directory and runs no Spark job, except the first read of an
+        instance and the first after each of its writes, which infer
+        the read schema."""
         self.spark = spark
         self.base_path = base_path
+        self._schema: StructType | None = None
         self._m_writes = self._m_reads = self._m_latency = None
         if metrics_registry is not None:
             self._m_writes = metrics_registry.counter(
@@ -89,17 +100,41 @@ class FeatureStore:
             .partitionBy(*KEY_COLS)
             .parquet(self.base_path)
         )
+        self._schema = None
         self._observe("write", domain, t0)
 
     # -- read ----------------------------------------------------------------
 
+    def _read_schema(self) -> StructType:
+        """The store's columns, merged over every file, with the key
+        columns as strings (so ``"007"`` and ``"7"`` stay two symbols).
+        Inferred on first use; ``write`` clears it."""
+        if self._schema is None:
+            inferred = (self.spark.read.option("mergeSchema", "true")
+                        .parquet(self.base_path).schema)
+            self._schema = StructType([
+                StructField(f.name, StringType()) if f.name in KEY_COLS else f
+                for f in inferred
+            ])
+        return self._schema
+
     def _scan(self, domain: str, symbol: str, timeframe: str) -> DataFrame:
-        df = self.spark.read.parquet(self.base_path)
-        return df.filter(
-            (F.col("domain") == domain)
-            & (F.col("symbol") == symbol.replace("/", "-").replace(":", "-").upper())
-            & (F.col("timeframe") == timeframe)
-        )
+        """The rows of one key: a scan of its one partition directory,
+        escaped as the writer escapes it. A key never written is an
+        empty frame."""
+        schema = self._read_schema()
+        escape = (self.spark._jvm.org.apache.spark.sql.catalyst.catalog
+                  .ExternalCatalogUtils.escapePathName)
+        values = (domain, symbol.replace("/", "-").replace(":", "-").upper(), timeframe)
+        path = "/".join([self.base_path.rstrip("/")]
+                        + [f"{k}={escape(v)}" for k, v in zip(KEY_COLS, values)])
+        try:
+            return (self.spark.read.schema(schema)
+                    .option("basePath", self.base_path).parquet(path))
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+            return self.spark.createDataFrame([], schema)
 
     def read(self, domain: str, symbol: str, timeframe: str, ts_epoch: int) -> DataFrame:
         """Point read — filter on the full key (``redis_store.py:151-168``)."""

@@ -1190,28 +1190,11 @@ def _ivf_batches(spark, path: str) -> tuple[set, int, list]:
     :class:`..store.rollup.RollupStore` idempotence pattern. Only a
     MISSING path reads as a fresh index (structured error class
     first, the r8 ADVICE discipline); any other failure propagates."""
-    from pyspark.errors import AnalysisException
+    from ..sources.lake import read_parquet_or_empty
 
-    p = path.rstrip("/") + "/batches"
-    try:
-        rows = spark.read.schema("batch_id string, seq bigint").parquet(p).collect()
-    except AnalysisException as e:
-        cond = None
-        for accessor in ("getCondition", "getErrorClass"):
-            fn = getattr(e, accessor, None)
-            if fn is None:
-                continue
-            try:
-                cond = fn()
-            except Exception:
-                cond = None
-            if cond is not None:
-                break
-        missing = (cond == "PATH_NOT_FOUND") if cond is not None \
-            else ("PATH_NOT_FOUND" in str(e))
-        if missing:
-            return set(), 1, []
-        raise
+    rows = read_parquet_or_empty(
+        spark, path.rstrip("/") + "/batches", "batch_id string, seq bigint"
+    ).collect()
     return (
         {r["batch_id"] for r in rows},
         max((r["seq"] for r in rows), default=0) + 1,

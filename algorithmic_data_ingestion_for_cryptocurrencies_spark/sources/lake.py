@@ -85,6 +85,44 @@ def read_lake(
     return df
 
 
+def read_parquet_or_empty(
+    spark: SparkSession, path: str, schema: StructType | str, **options
+) -> DataFrame:
+    """``spark.read.schema(schema).options(**options).parquet(path)``,
+    or an empty frame of ``schema`` when ``path`` does not exist. Only
+    a MISSING path reads as empty; any other failure — corrupt footer,
+    permissions, FS hiccup — propagates, because silently substituting
+    an empty table would make callers treat stored rows as absent.
+
+    Missing-path detection uses the STRUCTURED error class
+    (``getCondition()`` on pyspark>=4, ``getErrorClass()`` on older
+    builds) — a substring match on the rendered message would misread
+    any wrapped/reworded error that merely MENTIONS PATH_NOT_FOUND as
+    a missing path; the substring stays only as the last-resort
+    fallback for builds exposing neither accessor."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.schema(schema).options(**options).parquet(path)
+    except AnalysisException as e:
+        cond = None
+        for accessor in ("getCondition", "getErrorClass"):
+            fn = getattr(e, accessor, None)
+            if fn is None:
+                continue
+            try:
+                cond = fn()
+            except Exception:
+                cond = None
+            if cond is not None:
+                break
+        missing = (cond == "PATH_NOT_FOUND") if cond is not None \
+            else ("PATH_NOT_FOUND" in str(e))
+        if missing:
+            return spark.createDataFrame([], schema)
+        raise
+
+
 def compact_lake(
     spark: SparkSession,
     base_path: str,

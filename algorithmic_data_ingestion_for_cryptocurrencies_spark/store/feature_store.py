@@ -17,25 +17,35 @@ read lists that directory only and runs no Spark job; the collect is
 the read's one job. Rows are written sorted by ``ts`` so Parquet
 row-group min/max stats subsume the Redis ZSET index (SURVEY §1.1, §4).
 The read schema (every file's columns, key columns as strings) is
-inferred once per instance and cleared by that instance's writes; a
-column another writer adds appears once a new instance is opened.
-Rows appended by any writer show in the next read. Payloads stay
-*columnar* (one column per feature) — the JSON-blob shape of Redis is
-an access-API detail, not a storage one.
+inferred once per instance, by the instance's first read; the
+instance's own appends extend it with the columns they add, so no
+later read infers again. A column another writer adds appears once a
+new instance is opened. Rows appended by any writer show in the next
+read. Payloads stay *columnar* (one column per feature) — the
+JSON-blob shape of Redis is an access-API detail, not a storage one.
 """
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Sequence
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..functions.cleaning import sanitize_symbol
 from ..operators.joins import expected_grid, find_gaps
+from ..sources.lake import read_parquet_or_empty
 
 KEY_COLS = ("domain", "symbol", "timeframe")
+
+
+def _store_schema(fields) -> StructType:
+    """``fields`` as a store read schema: the data columns, then the
+    key columns as strings (so ``"007"`` and ``"7"`` stay two
+    symbols)."""
+    return StructType([f for f in fields if f.name not in KEY_COLS]
+                      + [StructField(k, StringType()) for k in KEY_COLS])
 
 
 class FeatureStore:
@@ -51,11 +61,15 @@ class FeatureStore:
         for reads (reads are lazy; execution cost lands on whichever
         job consumes the frame). A read build lists one partition
         directory and runs no Spark job, except the first read of an
-        instance and the first after each of its writes, which infer
+        instance (or the first after a non-append write), which infers
         the read schema."""
         self.spark = spark
         self.base_path = base_path
         self._schema: StructType | None = None
+        # a streaming ingest writes from its foreachBatch thread while
+        # callers read: the lock keeps an inference that started before
+        # a write landed from dropping the columns that write added
+        self._schema_lock = threading.Lock()
         self._m_writes = self._m_reads = self._m_latency = None
         if metrics_registry is not None:
             self._m_writes = metrics_registry.counter(
@@ -100,23 +114,29 @@ class FeatureStore:
             .partitionBy(*KEY_COLS)
             .parquet(self.base_path)
         )
-        self._schema = None
+        with self._schema_lock:
+            if mode != "append":  # the store may have been replaced
+                self._schema = None
+            elif self._schema is not None:
+                known = set(self._schema.fieldNames())
+                self._schema = _store_schema(list(self._schema) + [
+                    StructField(f.name, f.dataType)
+                    for f in out.schema if f.name not in known
+                ])
         self._observe("write", domain, t0)
 
     # -- read ----------------------------------------------------------------
 
     def _read_schema(self) -> StructType:
         """The store's columns, merged over every file, with the key
-        columns as strings (so ``"007"`` and ``"7"`` stay two symbols).
-        Inferred on first use; ``write`` clears it."""
-        if self._schema is None:
-            inferred = (self.spark.read.option("mergeSchema", "true")
-                        .parquet(self.base_path).schema)
-            self._schema = StructType([
-                StructField(f.name, StringType()) if f.name in KEY_COLS else f
-                for f in inferred
-            ])
-        return self._schema
+        columns as strings. Inferred on first use; ``write`` extends
+        it on append and clears it otherwise."""
+        with self._schema_lock:
+            if self._schema is None:
+                self._schema = _store_schema(
+                    self.spark.read.option("mergeSchema", "true")
+                    .parquet(self.base_path).schema)
+            return self._schema
 
     def _scan(self, domain: str, symbol: str, timeframe: str) -> DataFrame:
         """The rows of one key: a scan of its one partition directory,
@@ -128,13 +148,8 @@ class FeatureStore:
         values = (domain, symbol.replace("/", "-").replace(":", "-").upper(), timeframe)
         path = "/".join([self.base_path.rstrip("/")]
                         + [f"{k}={escape(v)}" for k, v in zip(KEY_COLS, values)])
-        try:
-            return (self.spark.read.schema(schema)
-                    .option("basePath", self.base_path).parquet(path))
-        except AnalysisException as e:
-            if e.getCondition() != "PATH_NOT_FOUND":
-                raise
-            return self.spark.createDataFrame([], schema)
+        return read_parquet_or_empty(self.spark, path, schema,
+                                     basePath=self.base_path)
 
     def read(self, domain: str, symbol: str, timeframe: str, ts_epoch: int) -> DataFrame:
         """Point read — filter on the full key (``redis_store.py:151-168``)."""
@@ -182,7 +197,7 @@ class FeatureStore:
         """Retention: rewrite the store keeping only live rows
         (Parquet is immutable; Delta would DELETE in place). Returns
         the surviving frame (parity: ``backfill.py:191-215``)."""
-        df = self.spark.read.parquet(self.base_path)
+        df = self.spark.read.schema(self._read_schema()).parquet(self.base_path)
         live = df.filter(F.col("ts_epoch") >= now_epoch - ttl_seconds)
         live.write.mode("overwrite").partitionBy(*KEY_COLS).parquet(out_path)
         return live

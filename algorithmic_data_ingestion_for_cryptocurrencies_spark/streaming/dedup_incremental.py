@@ -40,6 +40,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.dedup import banded_buckets, exact_dedup, minhash_signatures
+from ..sources.lake import read_parquet_or_empty
 
 _KEYS_DIR = "keys"
 _BANDS_DIR = "bands"
@@ -80,37 +81,9 @@ class IncrementalDedup:
         permissions, FS hiccup — propagates: silently substituting an
         empty store would make the anti-join re-emit previously-seen
         docs as unique (the silent-reset failure mode
-        ``RollupStore._read_manifest`` guards against).
-
-        Missing-path detection uses the STRUCTURED error class
-        (``getCondition()`` on pyspark>=4, ``getErrorClass()`` on
-        older builds) — a substring match on the rendered message
-        would misread any wrapped/reworded error that merely MENTIONS
-        PATH_NOT_FOUND as a fresh store; the substring stays only as
-        the last-resort fallback for builds exposing neither
-        accessor."""
-        from pyspark.errors import AnalysisException
-
-        p = os.path.join(self.path, sub)
-        try:
-            return self.spark.read.schema(schema).parquet(p)
-        except AnalysisException as e:
-            cond = None
-            for accessor in ("getCondition", "getErrorClass"):
-                fn = getattr(e, accessor, None)
-                if fn is None:
-                    continue
-                try:
-                    cond = fn()
-                except Exception:
-                    cond = None
-                if cond is not None:
-                    break
-            missing = (cond == "PATH_NOT_FOUND") if cond is not None \
-                else ("PATH_NOT_FOUND" in str(e))
-            if missing:
-                return self.spark.createDataFrame([], schema)
-            raise
+        ``RollupStore._read_manifest`` guards against)."""
+        return read_parquet_or_empty(
+            self.spark, os.path.join(self.path, sub), schema)
 
     def keys(self) -> DataFrame:
         return self._read(

@@ -1,11 +1,13 @@
 """Feature-store read contract: every read scans the one partition
 directory of its key with the store's read schema, which is inferred
-once per instance (key columns as strings) and cleared by the
-instance's own writes."""
+once per instance (key columns as strings) and extended by the
+instance's own appends."""
 
 from __future__ import annotations
 
 import os
+import threading
+import time
 import uuid
 
 import pandas as pd
@@ -13,6 +15,7 @@ import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql.types import StringType
 
+from algorithmic_data_ingestion_for_cryptocurrencies_spark.store import feature_store
 from algorithmic_data_ingestion_for_cryptocurrencies_spark.store.feature_store import (
     KEY_COLS,
     FeatureStore,
@@ -72,7 +75,7 @@ def test_numeric_looking_symbols_stay_distinct(spark, tmp_path):
 def test_each_read_runs_one_job(spark, tmp_path):
     store = FeatureStore(spark, str(tmp_path))
     store.write(_bars(spark, "BTC/USDT", 30), domain="market")
-    # the first read after a write may infer the read schema
+    # the first read of an instance infers the read schema
     assert _jobs(spark, lambda: store.read("market", "BTC/USDT", "1m", T0).collect()) <= 2
 
     assert _jobs(spark, lambda: store.read("market", "BTC/USDT", "1m", T0)) == 0
@@ -81,6 +84,25 @@ def test_each_read_runs_one_job(spark, tmp_path):
         "market", "BTC/USDT", "1m", [T0, T0 + 60]).collect()) == 1
     assert _jobs(spark, lambda: store.range_read(
         "market", "BTC/USDT", "1m", T0, HI, limit=5, reverse=True).collect()) == 1
+
+
+def test_reads_after_own_appends_run_one_job(spark, tmp_path):
+    """Appends interleaved with reads (the backfill and live-ingest
+    pattern): only the instance's first read infers the schema, also
+    when an append adds a column."""
+    store = FeatureStore(spark, str(tmp_path))
+    store.write(_bars(spark, "BTC/USDT", 3), domain="market")
+    store.read("market", "BTC/USDT", "1m", T0).collect()
+
+    for i, extra in enumerate(({}, {"rsi": [50.0]}, {})):
+        store.write(_bars(spark, "BTC/USDT", 1, start=T0 + 3600 * (i + 1), **extra),
+                    domain="market")
+        assert _jobs(spark, lambda: store.range_read(
+            "market", "BTC/USDT", "1m", T0, HI, limit=100).collect()) == 1
+        assert _jobs(spark, lambda: store.read(
+            "market", "BTC/USDT", "1m", T0).collect()) == 1
+    rows = store.range_read("market", "BTC/USDT", "1m", T0, HI).collect()
+    assert [r["rsi"] for r in rows] == [None] * 4 + [50.0, None]
 
 
 def test_read_scans_one_partition_directory(spark, tmp_path):
@@ -149,6 +171,57 @@ def test_new_column_appears_after_the_instance_writes_it(spark, tmp_path):
                 domain="market")
     rows = store.range_read("market", "BTC/USDT", "1m", T0, HI).collect()
     assert [r["rsi"] for r in rows] == [None, None, None, 40.0, 60.0]
+
+
+def test_write_landing_during_schema_inference_keeps_its_column(
+        spark, tmp_path, monkeypatch):
+    """A read infers the schema on one thread; an append that adds a
+    column lands on another before the inferred schema is cached. The
+    append's column must still show in the next read."""
+    store = FeatureStore(spark, str(tmp_path))
+    store.write(_bars(spark, "BTC/USDT", 3), domain="market")
+    key_dir = tmp_path / "domain=market" / "symbol=BTC-USDT" / "timeframe=1m"
+    n_files = len(list(key_dir.glob("*.parquet")))
+    inferring = threading.Event()
+    store_schema = feature_store._store_schema
+
+    def slow_store_schema(fields):
+        inferring.set()
+        # hold the pre-write schema until the write's files have landed
+        deadline = time.monotonic() + 60
+        while (len(list(key_dir.glob("*.parquet"))) == n_files
+               and time.monotonic() < deadline):
+            time.sleep(0.05)
+        return store_schema(fields)
+
+    monkeypatch.setattr(feature_store, "_store_schema", slow_store_schema)
+    first = []
+    reader = threading.Thread(target=lambda: first.append(
+        store.read("market", "BTC/USDT", "1m", T0).columns))
+    reader.start()
+    assert inferring.wait(60)
+    store.write(_bars(spark, "BTC/USDT", 1, start=T0 + 3600, rsi=[50.0]),
+                domain="market")
+    reader.join(60)
+    assert first and "rsi" not in first[0]
+
+    rows = store.range_read("market", "BTC/USDT", "1m", T0, HI).collect()
+    assert [r["rsi"] for r in rows] == [None, None, None, 50.0]
+
+
+def test_ttl_sweep_keeps_numeric_looking_symbols_apart(spark, tmp_path):
+    store = FeatureStore(spark, str(tmp_path / "store"))
+    store.write(_bars(spark, "007", 5), domain="market")
+    store.write(_bars(spark, "7", 3), domain="market")
+
+    out = tmp_path / "swept"
+    live = store.ttl_sweep(T0 + 240, 120, str(out))
+    assert sorted((r["symbol"], r["ts_epoch"]) for r in live.collect()) == [
+        ("007", T0 + 120), ("007", T0 + 180), ("007", T0 + 240), ("7", T0 + 120)]
+    assert sorted(os.listdir(out / "domain=market")) == ["symbol=007", "symbol=7"]
+    swept = FeatureStore(spark, str(out))
+    assert _epochs(swept, "007") == [T0 + 120, T0 + 180, T0 + 240]
+    assert _epochs(swept, "7") == [T0 + 120]
 
 
 def test_column_from_another_writer_appears_in_a_new_instance(spark, tmp_path):

@@ -59,8 +59,9 @@ def _jobs(spark, fn) -> int:
 
 def test_numeric_looking_symbols_stay_distinct(spark, tmp_path):
     """``"007"`` and ``"7"`` are two keys: neither read returns the
-    other's rows, and the symbol comes back as the string written."""
-    store = FeatureStore(spark, str(tmp_path))
+    other's rows, the symbol comes back as the string written, and a
+    TTL sweep keeps them apart."""
+    store = FeatureStore(spark, str(tmp_path / "store"))
     store.write(_bars(spark, "007", 5), domain="market")
     store.write(_bars(spark, "7", 3), domain="market")
 
@@ -70,6 +71,13 @@ def test_numeric_looking_symbols_stay_distinct(spark, tmp_path):
         assert {r["symbol"] for r in rows} == {symbol}
         point = store.read("market", symbol, "1m", T0).collect()
         assert [(r["symbol"], r["ts_epoch"]) for r in point] == [(symbol, T0)]
+
+    swept = tmp_path / "swept"
+    live = store.ttl_sweep(T0 + 240, 120, str(swept))
+    assert sorted((r["symbol"], r["ts_epoch"]) for r in live.collect()) == [
+        ("007", T0 + 120), ("007", T0 + 180), ("007", T0 + 240), ("7", T0 + 120)]
+    assert sorted(os.listdir(swept / "domain=market")) == ["symbol=007", "symbol=7"]
+    assert _epochs(FeatureStore(spark, str(swept)), "7") == [T0 + 120]
 
 
 def test_each_read_runs_one_job(spark, tmp_path):
@@ -207,21 +215,6 @@ def test_write_landing_during_schema_inference_keeps_its_column(
 
     rows = store.range_read("market", "BTC/USDT", "1m", T0, HI).collect()
     assert [r["rsi"] for r in rows] == [None, None, None, 50.0]
-
-
-def test_ttl_sweep_keeps_numeric_looking_symbols_apart(spark, tmp_path):
-    store = FeatureStore(spark, str(tmp_path / "store"))
-    store.write(_bars(spark, "007", 5), domain="market")
-    store.write(_bars(spark, "7", 3), domain="market")
-
-    out = tmp_path / "swept"
-    live = store.ttl_sweep(T0 + 240, 120, str(out))
-    assert sorted((r["symbol"], r["ts_epoch"]) for r in live.collect()) == [
-        ("007", T0 + 120), ("007", T0 + 180), ("007", T0 + 240), ("7", T0 + 120)]
-    assert sorted(os.listdir(out / "domain=market")) == ["symbol=007", "symbol=7"]
-    swept = FeatureStore(spark, str(out))
-    assert _epochs(swept, "007") == [T0 + 120, T0 + 180, T0 + 240]
-    assert _epochs(swept, "7") == [T0 + 120]
 
 
 def test_column_from_another_writer_appears_in_a_new_instance(spark, tmp_path):
